@@ -3,6 +3,7 @@ package graft.mr
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions.input_file_name
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Typed MapReduce façade — the reference engine's complete programming
   * model (reference `tasktracker.py:122-156, 209-296`) re-expressed as a
@@ -36,10 +37,12 @@ import scala.collection.mutable
   *
   * At 100 TB: `mapGroups` requires all values of one key in memory — the
   * same requirement the reference has (it materializes `(k, [values])`
-  * files). For algebraic aggregates prefer [[MapReduceJob.runReduced]]
-  * (streaming reduce, no per-key materialization) or the relational
-  * surface (`graft.operators.Relational`) where Catalyst does partial
-  * aggregation with spill.
+  * files). For algebraic aggregates prefer [[MapReduce.runReduced]]:
+  * its map side is a hash table bounded by the distinct keys of one
+  * input split, and its reduce side is the sort-based `groupByKey`,
+  * which spills and folds each key's values as they stream past. For
+  * anything Catalyst can express, the relational surface
+  * (`graft.operators.Relational`) does partial aggregation with spill.
   */
 final case class MapReduceJob[K, V, R](
     mapper: (String, String) => IterableOnce[(K, V)],
@@ -61,8 +64,10 @@ final case class MapReduceJob[K, V, R](
   }
 
   /** Map-task-local grouping + combine — the reference's
-    * `_group_by_key` + combiner loop (`tasktracker.py:209-226, 273-278`),
-    * bounded by distinct keys per partition instead of the whole job. */
+    * `_group_by_key` + combiner loop (`tasktracker.py:209-226, 273-278`).
+    * Its per-key buffers hold every mapped value until the combiner
+    * runs, so memory grows with the records of one task, not with its
+    * distinct keys; only the emitted output is one record per key. */
   private def localCombine(it: Iterator[(K, V)],
       c: (K, Seq[V]) => (K, V)): Iterator[(K, V)] = {
     val acc = mutable.LinkedHashMap.empty[K, mutable.ArrayBuffer[V]]
@@ -75,18 +80,30 @@ final case class MapReduceJob[K, V, R](
 
 object MapReduce {
   /** Pairwise-reduce variant for algebraic aggregates: no per-key value
-    * list ever materializes (Spark's `reduceGroups` does partial
-    * aggregation map-side). Use when `reduce` is associative+commutative —
-    * true for every example the reference ships. */
+    * list ever materializes. Each map task folds its mapped pairs into a
+    * hash map with `reduce` (the reference's in-task combiner,
+    * `tasktracker.py:209-226, 273-278`) and emits one record per
+    * distinct key; the reduce side folds each key's shuffled values
+    * with `reduce` as `mapGroups` streams them. Use when `reduce` is
+    * associative+commutative — true for every example the reference
+    * ships. */
   def runReduced[K, V](records: Dataset[(String, String)],
       mapper: (String, String) => IterableOnce[(K, V)],
       reduce: (V, V) => V)(implicit
-      ekv: Encoder[(K, V)], ek: Encoder[K], ekkv: Encoder[(K, (K, V))]): Dataset[(K, V)] = {
+      ekv: Encoder[(K, V)], ek: Encoder[K]): Dataset[(K, V)] = {
     val m = mapper
-    records.flatMap { kv: (String, String) => m(kv._1, kv._2) }
-      .groupByKey(_._1)
-      .reduceGroups((a: (K, V), b: (K, V)) => (a._1, reduce(a._2, b._2)))
-      .map { case (_, kv) => kv }
+    val f = reduce
+    records.mapPartitions { it: Iterator[(String, String)] =>
+      val acc = new java.util.HashMap[K, V]
+      it.foreach { case (rk, rv) =>
+        m(rk, rv).iterator.foreach { case (k, v) =>
+          val prev = acc.get(k)
+          // a null value is a value: only an absent key starts a fold
+          acc.put(k, if (prev == null && !acc.containsKey(k)) v else f(prev, v))
+        }
+      }
+      acc.entrySet.iterator.asScala.map(e => (e.getKey, e.getValue))
+    }.groupByKey(_._1).mapGroups { (k, it) => (k, it.map(_._2).reduce(f)) }
   }
 
   /** Text-file records in the reference's shape: `(k, v)` with `k` the

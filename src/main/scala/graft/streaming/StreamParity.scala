@@ -95,8 +95,9 @@ object StreamParity {
     * output never depends on it (optimization r17, guide §1.2 "don't
     * compute things you throw away"; the r17 `StreamFloorProbe`
     * decomposition shows every stateful parity query ending with an
-    * `in=0` batch costing the full per-batch floor — 0.58 s of
-    * st_interval_join's 2.11 s, ~0.9 s of st_asof_join_mb's 6.8 s).
+    * `in=0` batch costing the full per-batch floor — 0.73 s of
+    * st_interval_join's 2.50 s in `plans/r17/stream_floor_trailing_run.txt`,
+    * 0.96 s of st_asof_join_mb's 6.76 s in `plans/r17/stream_floor_parts4.txt`).
     * Spark runs that batch (`noDataMicroBatches.enabled`, default
     * true) so watermark-gated operators can EMIT and EVICT after the
     * last data batch; that is load-bearing exactly for append-mode

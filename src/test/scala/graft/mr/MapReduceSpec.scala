@@ -1,12 +1,23 @@
 package graft.mr
 
 import graft.SparkSpec
+import org.apache.spark.sql.{Dataset, Encoder}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** Tokenizers live outside the suite so Dataset closures don't capture
   * the (non-serializable) ScalaTest engine. */
 object MrTestFns {
   def tokens(line: String): Seq[String] =
     line.split("\\s+").filter(_.nonEmpty).toSeq
+
+  /** Associative, commutative fold over nullable strings: a null weighs
+    * 1, any other value is its decimal weight. */
+  def addWeights(a: String, b: String): String = {
+    def w(s: String) = if (s == null) 1L else s.toLong
+    (w(a) + w(b)).toString
+  }
 }
 
 /** Structured MR key for the keys-need-total-equality contract test
@@ -117,13 +128,70 @@ class MapReduceSpec extends SparkSpec {
     assert(got == Map("rex" -> 5.0, "fido" -> 2.0))
   }
 
+  /** `runReduced` against the listful `run` with `reducer = reduce` over
+    * the whole value list; returns the shared result. */
+  private def reducedMatchesRun[K, V](recs: Dataset[(String, String)],
+      mapper: (String, String) => IterableOnce[(K, V)], reduce: (V, V) => V)(implicit
+      ekv: Encoder[(K, V)], ek: Encoder[K]): Map[K, V] = {
+    val full = MapReduceJob[K, V, V](mapper, (k, vs) => (k, vs.reduce(reduce)))
+      .run(recs).collect().toMap
+    val reduced = MapReduce.runReduced[K, V](recs, mapper, reduce).collect()
+    assert(reduced.length == full.size, "runReduced emitted a key twice")
+    assert(reduced.toMap == full)
+    full
+  }
+
   test("runReduced (streaming algebraic path) equals full-list reducer") {
     import spark.implicits._
-    val full = MapReduceJob[String, Long, Long](
-      (_, v) => tokens(v).iterator.map(_ -> 1L), (k, vs) => (k, vs.sum))
-      .run(records).collect().toMap
-    val reduced = MapReduce.runReduced[String, Long](records,
-      (_, v) => tokens(v).iterator.map(_ -> 1L), _ + _).collect().toMap
-    assert(full == reduced)
+    reducedMatchesRun[String, Long](records, (_, v) => tokens(v).iterator.map(_ -> 1L), _ + _)
+
+    // case-class key: both sides group on the encoded form
+    val bigrams = reducedMatchesRun[Bigram, Long](records, (_, v) => {
+      val t = tokens(v)
+      t.zip(t.drop(1)).iterator.map { case (a, b) => Bigram(a, b) -> 1L }
+    }, _ + _)
+    assert(bigrams(Bigram("the", "quick")) == 2L)
+
+    // the (sum, count) average recipe of README.md:25-36
+    val scores = spark.createDataset(
+      Seq(("rex", "4"), ("rex", "6"), ("fido", "3"), ("rex", "5"), ("fido", "1")))
+    val sums = reducedMatchesRun[String, (Long, Long)](scores,
+      (k, v) => Iterator.single(k -> (v.toLong, 1L)),
+      (a, b) => (a._1 + b._1, a._2 + b._2))
+    assert(sums == Map("rex" -> (15L, 3L), "fido" -> (4L, 2L)))
+
+    val none = reducedMatchesRun[String, Long](spark.emptyDataset[(String, String)],
+      (_, v) => tokens(v).iterator.map(_ -> 1L), _ + _)
+    assert(none.isEmpty)
+
+    // "every" is mapped in each of the four partitions, so its final
+    // value is folded from four map-side partials
+    val spread = spark.sparkContext.parallelize(
+      (0 until 8).map(i => ("test", s"every w$i every")), 4).toDS()
+    val counts = reducedMatchesRun[String, Long](spread,
+      (_, v) => tokens(v).iterator.map(_ -> 1L), _ + _)
+    assert(counts("every") == 16L && counts.size == 9)
+
+    // a null value is a value, not an absent key: null weighs 1, so a
+    // fold that restarts at a stored null loses counts
+    val weighed = reducedMatchesRun[String, String](records,
+      (_, v) => tokens(v).iterator.map(_ -> (null: String)), MrTestFns.addWeights)
+    assert(weighed("the") == "3" && weighed("fox") == "2" && weighed("dog") == null)
+  }
+
+  test("runReduced plan: no ObjectHashAggregate; one shuffled record per distinct key per map task") {
+    import spark.implicits._
+    // two map tasks: {a, b} and {c, a}
+    val two = spark.sparkContext.parallelize(
+      Seq(("p0", "a b a b a"), ("p1", "c a c c")), 2).toDS()
+    val ds = MapReduce.runReduced[String, Long](two,
+      (_, v) => tokens(v).iterator.map(_ -> 1L), _ + _)
+    assert(ds.collect().toMap == Map("a" -> 4L, "b" -> 2L, "c" -> 3L))
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val plan = ds.queryExecution.executedPlan
+    assert(aqe.collect(plan) { case a: ObjectHashAggregateExec => a }.isEmpty, plan)
+    val exchanges = aqe.collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size == 1, plan)
+    assert(exchanges.head.metrics("shuffleRecordsWritten").value == 2 + 2)
   }
 }
