@@ -1,9 +1,12 @@
 package graft.mr
 
-import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoder, AgnosticEncoders}
+import org.apache.spark.sql.catalyst.encoders.AgnosticEncoders.{IterableEncoder, ProductEncoder}
 import org.apache.spark.sql.functions.input_file_name
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 
 /** Typed MapReduce façade — the reference engine's complete programming
   * model (reference `tasktracker.py:122-156, 209-296`) re-expressed as a
@@ -18,31 +21,37 @@ import scala.jdk.CollectionConverters._
   *   - `reducer(k, values) -> (K, R)` — applied to the fully shuffled
   *     value list per key (`tasktracker.py:228-271`).
   *
-  * Spark mapping: `flatMap → mapPartitions(local combine) → groupByKey →
-  * mapGroups`. The shuffle is Spark's hash exchange — NOT the reference's
-  * one-file-per-distinct-key filesystem shuffle (`tasktracker.py:287-296`),
-  * which is its central scalability bug. Partial (map-side) combining
-  * keeps shuffled bytes proportional to distinct keys per partition, the
-  * same property the reference's combiner provides.
+  * Spark mapping: `mapPartitions(map + group by key) → groupByKey →
+  * mapGroups`. Each map task groups its output by key and ships one
+  * `(key, values)` record per distinct key — the logical shape of the
+  * reference's one-file-per-distinct-key shuffle
+  * (`tasktracker.py:209-226, 287-296`), carried over Spark's hash
+  * exchange instead of the filesystem. With a combiner the record holds
+  * the one combined value, so shuffled bytes follow distinct keys per
+  * task, the same property the reference's combiner provides.
   *
   * Contract notes carried over from the reference (SURVEY.md §7):
   *   - Keys need a total equality/hash (the reference silently requires
   *     hashability, `tasktracker.py:275`).
-  *   - The combiner must be algebraic (commutative monoid): Spark may
-  *     apply it per partition and the reducer then sees combined values —
+  *   - The combiner must be algebraic (commutative monoid): it runs per
+  *     map-task flush window and the reducer then sees combined values —
   *     exactly like the reference, where every shipped example uses
   *     `combiner = reducer` (`count_functions.py:16-17`).
   *   - Output order is unspecified, matching the reference's set-union of
   *     per-key result files (`jobtracker.py:327-335`).
   *
-  * At 100 TB: `mapGroups` requires all values of one key in memory — the
-  * same requirement the reference has (it materializes `(k, [values])`
-  * files). For algebraic aggregates prefer [[MapReduce.runReduced]]:
-  * its map side is a hash table bounded by the distinct keys of one
-  * input split, and its reduce side is the sort-based `groupByKey`,
-  * which spills and folds each key's values as they stream past. For
-  * anything Catalyst can express, the relational surface
-  * (`graft.operators.Relational`) does partial aggregation with spill.
+  * At 100 TB: the map-side table is emitted and cleared every
+  * `MapReduceJob.MaxBuffered` mapped values, so a task's buffer is
+  * bounded by a constant, not by the records of its split; a key that
+  * spans flushes ships one partial list (or combined value) per flush.
+  * The reduce side is the sort-based `groupByKey`, which spills, but
+  * `mapGroups` still hands the reducer all values of one key in memory —
+  * the same requirement the reference has (it materializes
+  * `(k, [values])` files). For algebraic aggregates prefer
+  * [[MapReduce.runReduced]], which folds each key's values as they
+  * stream past. For anything Catalyst can express, the relational
+  * surface (`graft.operators.Relational`) does partial aggregation with
+  * spill.
   */
 final case class MapReduceJob[K, V, R](
     mapper: (String, String) => IterableOnce[(K, V)],
@@ -55,27 +64,75 @@ final case class MapReduceJob[K, V, R](
       ekv: Encoder[(K, V)], ekr: Encoder[(K, R)], ek: Encoder[K]): Dataset[(K, R)] = {
     val m = mapper
     val r = reducer
-    val mapped = records.flatMap { kv: (String, String) => m(kv._1, kv._2) }
-    val combined = combiner match {
-      case Some(c) => mapped.mapPartitions(localCombine(_, c))
-      case None    => mapped
+    val c = combiner
+    records.mapPartitions { it: Iterator[(String, String)] =>
+      MapReduceJob.groupLocal(it.flatMap { case (rk, rv) => m(rk, rv) }, c,
+        MapReduceJob.MaxBuffered)
+    }(MapReduceJob.groupedEncoder(ekv))
+      .groupByKey(_._1).mapGroups { (k, it) => r(k, it.flatMap(_._2).toSeq) }
+  }
+}
+
+object MapReduceJob {
+  /** Mapped values one map task buffers before it emits and clears its
+    * table. A buffered value costs 24-48 bytes (its list cell and, unless
+    * cached, its box), so 2^19 values hold a task's table near 12-25 MB
+    * plus its distinct keys: 32 concurrent tasks fit in the user-memory
+    * share of an 8 GB heap. A flush costs shuffled records only for keys
+    * that recur in the next window; a 2^19-word window of text over a
+    * 50,000-word vocabulary still ships at least ten times fewer
+    * records than it mapped. */
+  private val MaxBuffered = 1 << 19
+
+  /** Map-task-local grouping — the reference's `_group_by_key` +
+    * combiner loop (`tasktracker.py:209-226, 273-278`): one
+    * `(key, values)` record per distinct key, or `(key, Seq(combined))`
+    * with a combiner. The table is emitted and cleared every
+    * `maxBuffered` values; that is legal because the combiner is
+    * algebraic and the reducer already sees per-task partial lists. */
+  private[mr] def groupLocal[K, V](mapped: Iterator[(K, V)],
+      combiner: Option[(K, Seq[V]) => (K, V)],
+      maxBuffered: Int): Iterator[(K, Seq[V])] = new Iterator[(K, Seq[V])] {
+    private val table = new java.util.HashMap[K, mutable.ListBuffer[V]]
+    private var out: Iterator[(K, Seq[V])] = Iterator.empty
+
+    def hasNext: Boolean = out.hasNext || (mapped.hasNext && { fill(); out.hasNext })
+
+    def next(): (K, Seq[V]) =
+      if (hasNext) out.next() else throw new NoSuchElementException
+
+    private def fill(): Unit = {
+      table.clear()
+      var n = 0
+      while (n < maxBuffered && mapped.hasNext) {
+        val (k, v) = mapped.next()
+        var vs = table.get(k)
+        if (vs == null) { vs = mutable.ListBuffer.empty[V]; table.put(k, vs) }
+        vs += v
+        n += 1
+      }
+      out = table.entrySet.iterator.asScala.map { e =>
+        combiner match {
+          case Some(f) => val (k, v) = f(e.getKey, e.getValue.toList); (k, v :: Nil)
+          case None    => (e.getKey, e.getValue.toList)
+        }
+      }
     }
-    combined.groupByKey(_._1).mapGroups { (k, it) => r(k, it.map(_._2).toSeq) }
   }
 
-  /** Map-task-local grouping + combine — the reference's
-    * `_group_by_key` + combiner loop (`tasktracker.py:209-226, 273-278`).
-    * Its per-key buffers hold every mapped value until the combiner
-    * runs, so memory grows with the records of one task, not with its
-    * distinct keys; only the emitted output is one record per key. */
-  private def localCombine(it: Iterator[(K, V)],
-      c: (K, Seq[V]) => (K, V)): Iterator[(K, V)] = {
-    val acc = mutable.LinkedHashMap.empty[K, mutable.ArrayBuffer[V]]
-    it.foreach { case (k, v) =>
-      acc.getOrElseUpdate(k, mutable.ArrayBuffer.empty[V]) += v
+  /** `(K, Seq[V])` encoder built from the fields of the job's
+    * `(K, V)` tuple encoder, so `run` keeps its public signature. */
+  private def groupedEncoder[K, V](ekv: Encoder[(K, V)]): Encoder[(K, Seq[V])] =
+    AgnosticEncoders.agnosticEncoderFor(ekv) match {
+      case ProductEncoder(_, Seq(k, v), _) =>
+        val vs = IterableEncoder[Seq[V], V](ClassTag(classOf[Seq[_]]),
+          v.enc.asInstanceOf[AgnosticEncoder[V]], v.enc.nullable,
+          lenientSerialization = false)
+        Encoders.tuple(k.enc.asInstanceOf[AgnosticEncoder[K]], vs)
+      case other =>
+        throw new IllegalArgumentException("MapReduceJob.run needs a (K, V) " +
+          s"encoder that is a 2-field product (tuple) encoder, got ${other.getClass.getSimpleName}")
     }
-    acc.iterator.map { case (k, vs) => c(k, vs.toSeq) }
-  }
 }
 
 object MapReduce {

@@ -115,7 +115,19 @@ object StreamParity {
     * shutdown knob, not a semantics knob. Env override runs the
     * Spark default for A/Bs. */
   private val SkipTrailingNoDataBatch =
-    sys.env.getOrElse("SPARK_GRAFT_TRAILING_BATCH", "skip") == "skip"
+    envChoice("SPARK_GRAFT_TRAILING_BATCH", Seq("skip", "run")) == "skip"
+
+  /** Value of the A/B knob `name`: the first of `accepted` when unset,
+    * and a loud failure on any value outside `accepted`, so a typo
+    * cannot silently select the other arm. */
+  private[streaming] def envChoice(name: String, accepted: Seq[String],
+      env: collection.Map[String, String] = sys.env): String =
+    env.get(name) match {
+      case None                            => accepted.head
+      case Some(v) if accepted.contains(v) => v
+      case Some(v) =>
+        sys.error(s"$name=$v: accepted values are ${accepted.mkString(", ")}")
+    }
 
   private def noDataBatchConfs(watermarkFlush: Boolean): Seq[(String, String)] =
     if (!watermarkFlush && SkipTrailingNoDataBatch)
@@ -174,7 +186,7 @@ object StreamParity {
     * different story). Env override runs the checksummed default for
     * A/Bs. */
   private val ckptScheme =
-    if (sys.env.getOrElse("SPARK_GRAFT_CKPT_FS", "raw") == "raw") "rawlocal://"
+    if (envChoice("SPARK_GRAFT_CKPT_FS", Seq("raw", "default")) == "raw") "rawlocal://"
     else ""
 
   /** Run `f` with a fresh per-query checkpoint dir under [[ckptRoot]],
@@ -501,6 +513,7 @@ object StreamParity {
       }
       q.recentProgress.flatMap(_.stateOperators)
     }
+    // valid only under the default HDFS state provider or RocksDB row tracking
     val removed = stateOps.map(_.numRowsRemoved).sum
     require(removed > 0, "event-time timeout never evicted state — " +
       "the bounded-state contract did not engage")

@@ -1,7 +1,7 @@
 package graft.mr
 
 import graft.SparkSpec
-import org.apache.spark.sql.{Dataset, Encoder}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -193,5 +193,96 @@ class MapReduceSpec extends SparkSpec {
     val exchanges = aqe.collect(plan) { case e: ShuffleExchangeExec => e }
     assert(exchanges.size == 1, plan)
     assert(exchanges.head.metrics("shuffleRecordsWritten").value == 2 + 2)
+  }
+
+  /** `run` with a reducer that returns the key's values, sorted, against
+    * an in-process group-by over the same mapper. */
+  private def groupsMatchOracle[K, V](recs: Dataset[(String, String)],
+      mapper: (String, String) => IterableOnce[(K, V)])(implicit
+      ekv: Encoder[(K, V)], eks: Encoder[(K, Seq[String])],
+      ek: Encoder[K]): Map[K, Seq[String]] = {
+    val got = MapReduceJob[K, V, Seq[String]](mapper,
+      (k, vs) => (k, vs.map(String.valueOf).sorted)).run(recs).collect()
+    val oracle = recs.collect().toSeq.flatMap { case (k, v) => mapper(k, v).iterator.toSeq }
+      .groupBy(_._1).view.mapValues(_.map(kv => String.valueOf(kv._2)).sorted).toMap
+    assert(got.length == oracle.size, "run emitted a key twice")
+    assert(got.toMap == oracle)
+    oracle
+  }
+
+  test("run without combiner hands the reducer exactly the grouped value multiset") {
+    import spark.implicits._
+    val bigrams = groupsMatchOracle[Bigram, Long](records, (_, v) => {
+      val t = tokens(v)
+      t.zip(t.drop(1)).iterator.map { case (a, b) => Bigram(a, b) -> 1L }
+    })
+    assert(bigrams(Bigram("the", "quick")) == Seq("1", "1"))
+
+    val scores = spark.createDataset(
+      Seq(("rex", "4"), ("rex", "6"), ("fido", "3"), ("rex", "5"), ("fido", "1")))
+    val pairs = groupsMatchOracle[String, (Long, Long)](scores,
+      (k, v) => Iterator.single(k -> (v.toLong, 1L)))
+    assert(pairs("rex") == Seq("(4,1)", "(5,1)", "(6,1)"))
+
+    val nulls = groupsMatchOracle[String, String](records,
+      (_, v) => tokens(v).iterator.map(_ -> (null: String)))
+    assert(nulls("the") == Seq("null", "null", "null"))
+
+    val none = groupsMatchOracle[String, Long](spark.emptyDataset[(String, String)],
+      (_, v) => tokens(v).iterator.map(_ -> 1L))
+    assert(none.isEmpty)
+
+    // "every" is mapped in each of the four partitions, so its list is
+    // concatenated from four map-side partial lists
+    val spread = spark.sparkContext.parallelize(
+      (0 until 8).map(i => ("test", s"every w$i every")), 4).toDS()
+    val every = groupsMatchOracle[String, Long](spread,
+      (_, v) => tokens(v).iterator.map(_ -> 1L))
+    assert(every("every").size == 16 && every.size == 9)
+  }
+
+  test("run without combiner shuffles one record per distinct key per map task") {
+    import spark.implicits._
+    // two map tasks: {a, b} and {c, a}
+    val two = spark.sparkContext.parallelize(
+      Seq(("p0", "a b a b a"), ("p1", "c a c c")), 2).toDS()
+    val ds = MapReduceJob[String, Long, Long](
+      (_, v) => tokens(v).iterator.map(_ -> 1L), (k, vs) => (k, vs.sum)).run(two)
+    assert(ds.collect().toMap == Map("a" -> 4L, "b" -> 2L, "c" -> 3L))
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val plan = ds.queryExecution.executedPlan
+    val exchanges = aqe.collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size == 1, plan)
+    assert(exchanges.head.metrics("shuffleRecordsWritten").value == 2 + 2)
+  }
+
+  test("map-side grouping flushed every few values equals the unbounded grouping") {
+    val mapped = "the cat and the dog and the bird saw the cat".split(" ")
+      .toSeq.map(_ -> 1L)
+    def regrouped(out: Iterator[(String, Seq[Long])]): Map[String, Seq[Long]] =
+      out.toSeq.groupBy(_._1).view.mapValues(_.flatMap(_._2).sorted).toMap
+    val sum: Option[(String, Seq[Long]) => (String, Long)] = Some((k, vs) => (k, vs.sum))
+
+    for (c <- Seq(None, sum)) {
+      val unbounded = MapReduceJob.groupLocal(mapped.iterator, c, Int.MaxValue).toSeq
+      val flushed = MapReduceJob.groupLocal(mapped.iterator, c, 3).toSeq
+      assert(unbounded.size == mapped.map(_._1).distinct.size)
+      assert(flushed.size > unbounded.size, "a bound of 3 never flushed")
+      val merged = regrouped(flushed.iterator)
+      if (c.isEmpty) assert(merged == regrouped(unbounded.iterator))
+      else assert(merged.view.mapValues(_.sum).toMap ==
+        unbounded.map { case (k, vs) => k -> vs.sum }.toMap)
+    }
+    assert(MapReduceJob.groupLocal(Iterator.empty[(String, Long)], sum, 3).isEmpty)
+  }
+
+  test("run with a non-product (K, V) encoder fails before planning") {
+    import spark.implicits._
+    val job = MapReduceJob[String, Long, Long](
+      (_, v) => tokens(v).iterator.map(_ -> 1L), (k, vs) => (k, vs.sum))
+    val e = intercept[IllegalArgumentException] {
+      job.run(records)(Encoders.kryo[(String, Long)], implicitly, implicitly)
+    }
+    assert(e.getMessage.contains("2-field product (tuple) encoder"), e.getMessage)
   }
 }
