@@ -1,21 +1,23 @@
 package graft.sources
 
 import java.net.URI
-import org.apache.hadoop.fs.RawLocalFileSystem
 
 /** Checksum-free local filesystem under its own `rawlocal://` scheme
-  * (optimization r17, guide §6). Hadoop's default `file://` is
-  * ChecksumFileSystem: every file create also creates, writes and
-  * renames a `.crc` twin — so each streaming micro-batch's offset-log
-  * entry, commit-log entry and per-store state delta pays DOUBLE the
-  * file operations. For the parity harness's THROWAWAY tmpfs
-  * checkpoints ([[graft.streaming.StreamParity]]) the checksums protect
-  * nothing: the tree lives for one query on `/dev/shm` and is deleted
-  * on completion, and a corrupted read would fail the oracle hash gate
-  * anyway. A production deployment points checkpoints at durable
-  * shared storage with its own integrity story (HDFS block checksums,
-  * object-store ETags) — the bare-local-FS case this class covers is
-  * exactly the case where the extra `.crc` files buy nothing.
+  * (optimization r17, guide §6), for the parity harness's THROWAWAY
+  * tmpfs checkpoints ([[graft.streaming.StreamParity]]). Hadoop's
+  * default `file://` is ChecksumFileSystem: every file create also
+  * creates, writes and renames a `.crc` twin. Those twins turned out
+  * not to be the main per-file cost: without libhadoop, stock
+  * `RawLocalFileSystem` also started a `chmod` process per create and a
+  * `readlink` process per link-status lookup, which is why this class
+  * extends the fork-free [[NoForkRawLocalFileSystem]], the same raw
+  * file system `file://` checkpoints now use through [[LocalFsNoFork]].
+  * What is left here is the `.crc` saving. The checksums protect
+  * nothing on these trees: each lives for one query on `/dev/shm` and is
+  * deleted on completion, and a corrupted read would fail the oracle
+  * hash gate anyway. A production deployment points checkpoints at
+  * durable shared storage with its own integrity story (HDFS block
+  * checksums, object-store ETags).
   *
   * The subclass exists because `FileSystem.checkPath` requires the
   * instance's URI scheme to match the path's scheme, and
@@ -23,6 +25,6 @@ import org.apache.hadoop.fs.RawLocalFileSystem
   * parent class under `fs.rawlocal.impl` would fail `makeQualified`
   * on every `rawlocal://` path. Registered (inert until a path uses
   * the scheme) in [[graft.GraftSession.builder]]. */
-class RawLocalCkptFs extends RawLocalFileSystem {
+class RawLocalCkptFs extends NoForkRawLocalFileSystem {
   override def getUri: URI = URI.create("rawlocal:///")
 }

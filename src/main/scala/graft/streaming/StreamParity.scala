@@ -183,8 +183,9 @@ object StreamParity {
     * twin (create + write + rename doubled) — pure overhead on a
     * tmpfs tree that lives for one query and is deleted on completion
     * (see the class doc for why production durable checkpoints are a
-    * different story). Env override runs the checksummed default for
-    * A/Bs. */
+    * different story). Both schemes run on the fork-free raw file
+    * system ([[graft.sources.NoForkRawLocalFileSystem]]). Env override
+    * runs the checksummed default for A/Bs. */
   private val ckptScheme =
     if (envChoice("SPARK_GRAFT_CKPT_FS", Seq("raw", "default")) == "raw") "rawlocal://"
     else ""
