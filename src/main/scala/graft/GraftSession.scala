@@ -31,32 +31,10 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // autoBroadcastJoinThreshold stays at the Spark default. A
-      // round-16 subset A/B initially read 64 MB as −5% and was
-      // reverted; the r16 plan evidence was initial plans only
-      // (isFinalPlan=false — the old PlanDump exec mode never ran the
-      // dumped QueryExecution, r16 advice), so r17 re-ran the dump
-      // with the FIXED exec mode: the EXECUTED final adaptive plans
-      // (plans/r17/*_bcast{10,64}.txt, isFinalPlan=true) are
-      // structurally identical at 10 vs 64 MB on all nine join-heavy
-      // queries (only plan_id counters differ) — no AQE runtime flip
-      // either, so the retraction stands on real evidence. Env
-      // override retained for dumps/A-Bs.
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        (sys.env.getOrElse("SPARK_GRAFT_BCAST_MB", "10").toLong << 20).toString)
-      // AQE post-shuffle coalescing A/B knobs (optimization r17, 32-core
-      // anti-scaler triage — q18_except_cust ran 4.3x FASTER on 8 cores
-      // in BENCH_r16_c8): with parallelismFirst=true (Spark default)
-      // AQE coalesces only down to minPartitionSize (1 MB) to maximize
-      // parallelism, so a KB-sized shuffle still fans out to ~cores
-      // partitions and sub-second queries pay 32-way task overhead.
-      // Spark's own docs recommend setting it false so the advisory
-      // size governs. Defaults here stay the Spark defaults; the env
-      // overrides exist for the measured A/B (see OPTIMIZATION_r17.md).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PFIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        (sys.env.getOrElse("SPARK_GRAFT_ADVISORY_MB", "64").toLong << 20).toString)
+      // autoBroadcastJoinThreshold, coalescePartitions.parallelismFirst
+      // and advisoryPartitionSizeInBytes stay at Spark's defaults (10 MiB,
+      // true, 64 MiB); the A/Bs that refuted changing them are in
+      // OPTIMIZATION_r17.md.
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir",
         sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-warehouse")
@@ -73,15 +51,6 @@ object GraftSession {
       // the as-of merge exec plan with ZERO Exchange and ZERO Sort over
       // them (adv_asof_join_bucketed asserts that plan in-query).
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      // Scheme alias for CHECKSUM-FREE local file access (optimization
-      // r17, guide §6): Hadoop's default file:// is ChecksumFileSystem,
-      // so every tiny streaming-checkpoint write (offset log, commit
-      // log, state-store delta) also creates+writes a .crc twin —
-      // pure overhead on the THROWAWAY tmpfs checkpoints the parity
-      // harness uses (StreamParity.ckptRoot). Registering the scheme
-      // is inert by itself; StreamParity opts in per checkpoint path.
-      .config("spark.hadoop.fs.rawlocal.impl",
-        "graft.sources.RawLocalCkptFs")
       // FileContext file system of file:// paths, i.e. of every local
       // streaming checkpoint (offset log, commit log, state-store
       // deltas): stock LocalFs without libhadoop starts a chmod process
@@ -132,11 +101,6 @@ object GraftSession {
       // cluster is where the ingest-once zero-exchange/zero-sort as-of
       // layout actually pays
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      // same rawlocal:// registration as builder(): inert unless a
-      // path opts into the scheme (StreamParity's ephemeral
-      // checkpoints do; durable checkpoints never should)
-      .config("spark.hadoop.fs.rawlocal.impl",
-        "graft.sources.RawLocalCkptFs")
       // same fork-free FileContext file:// as builder(), for
       // checkpoints on a node-local path
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",

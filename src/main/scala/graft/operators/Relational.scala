@@ -566,10 +566,11 @@ object Relational {
     * single narrow job, followed by the one real shuffle (the depth
     * histogram). The native `WITH RECURSIVE` form above materializes
     * every level as its own job (Spark's UnionLoop), so ~14 levels pay
-    * ~14 fixed per-job costs; measured A/B at sf0.1 (`tools/Q35Probe`,
-    * 5 per-rep sessions): native 2.14 s median, native with AQE OFF
-    * 5.92 s (AQE is a 3× WIN here — the re-planning hypothesis is
-    * refuted), unrolled **0.47 s** — 4.5× under the native form, with
+    * ~14 fixed per-job costs; measured A/B at sf0.1 (5 per-rep
+    * sessions; `BASELINE.md`, "q35_recursive_depth — per-job tax
+    * ATTRIBUTED"): native 2.14 s median, native with AQE OFF 5.92 s
+    * (AQE is a 3× WIN here — the re-planning hypothesis is refuted),
+    * unrolled **0.47 s** — 4.5× under the native form, with
     * bit-identical output under the same DuckDB recursive oracle.
     *
     * 100 TB shape: the unroll trades driver-side plan size (levels ×

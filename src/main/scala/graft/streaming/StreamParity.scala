@@ -48,18 +48,15 @@ object StreamParity {
     * 8 → 4 (optimization r17, guide §2.1/§5; VERDICT r16 item 1):
     * every micro-batch of every stateful query pays one state-store
     * commit per partition — pure fixed overhead at these per-store
-    * cardinalities. `StreamFloorProbe` at 8/4/2 on st_asof_join_mb
-    * reads per-batch stateCommit SUMS of 3063/1182/400 ms (the
-    * mechanism), and the two isolated 10-query A/Bs (controls
-    * co-located) read the st subset ×0.93 at 4 vs 8 (7 of 10 queries
-    * ≥5% faster; one counter-mover, st_sessions_changelog +6%
-    * isolated, accepted against the family-wide gain; 2 showed no
-    * further gain over 4 and lost on the session family). Still a
-    * DATA-cardinality knob, not a core-count one — a production
-    * deployment sizes it from expected keys per store; env override
-    * for A/Bs. */
-  private val StatePartitions =
-    sys.env.getOrElse("SPARK_GRAFT_STATE_PARTS", "4").toInt
+    * cardinalities. The per-batch decomposition of st_asof_join_mb at
+    * 8/4/2 partitions (`plans/r17/stream_floor_parts*.txt`) reads
+    * stateCommit SUMS of 3063/1182/400 ms (the mechanism), and the two
+    * isolated 10-query A/Bs (controls co-located) read the st subset
+    * ×0.93 at 4 vs 8 (7 of 10 queries ≥5% faster; one counter-mover,
+    * st_sessions_changelog +6% isolated, accepted against the
+    * family-wide gain; 2 showed no further gain over 4 and lost on the
+    * session family). */
+  private val StatePartitions = 4
 
   /** Serializes every set/start/restore sequence (round 11, advice):
     * declared queries run CONCURRENTLY on one shared session, and two
@@ -93,11 +90,11 @@ object StreamParity {
 
   /** Skip the TRAILING NO-DATA micro-batch for queries whose sink
     * output never depends on it (optimization r17, guide §1.2 "don't
-    * compute things you throw away"; the r17 `StreamFloorProbe`
-    * decomposition shows every stateful parity query ending with an
-    * `in=0` batch costing the full per-batch floor — 0.73 s of
-    * st_interval_join's 2.50 s in `plans/r17/stream_floor_trailing_run.txt`,
-    * 0.96 s of st_asof_join_mb's 6.76 s in `plans/r17/stream_floor_parts4.txt`).
+    * compute things you throw away"; the r17 per-batch decompositions
+    * show every stateful parity query ending with an `in=0` batch
+    * costing the full per-batch floor — 0.73 s of st_interval_join's
+    * 2.50 s in `plans/r17/stream_floor_trailing_run.txt`, 0.96 s of
+    * st_asof_join_mb's 6.76 s in `plans/r17/stream_floor_parts4.txt`).
     * Spark runs that batch (`noDataMicroBatches.enabled`, default
     * true) so watermark-gated operators can EMIT and EVICT after the
     * last data batch; that is load-bearing exactly for append-mode
@@ -112,25 +109,9 @@ object StreamParity {
     * sink table is IDENTICAL with or without it (oracle-verified for
     * all 16 affected queries). Production continuous streams never
     * see a "final" batch at all — this is a verification-harness
-    * shutdown knob, not a semantics knob. Env override runs the
-    * Spark default for A/Bs. */
-  private val SkipTrailingNoDataBatch =
-    envChoice("SPARK_GRAFT_TRAILING_BATCH", Seq("skip", "run")) == "skip"
-
-  /** Value of the A/B knob `name`: the first of `accepted` when unset,
-    * and a loud failure on any value outside `accepted`, so a typo
-    * cannot silently select the other arm. */
-  private[streaming] def envChoice(name: String, accepted: Seq[String],
-      env: collection.Map[String, String] = sys.env): String =
-    env.get(name) match {
-      case None                            => accepted.head
-      case Some(v) if accepted.contains(v) => v
-      case Some(v) =>
-        sys.error(s"$name=$v: accepted values are ${accepted.mkString(", ")}")
-    }
-
+    * shutdown setting, not a semantics one. */
   private def noDataBatchConfs(watermarkFlush: Boolean): Seq[(String, String)] =
-    if (!watermarkFlush && SkipTrailingNoDataBatch)
+    if (!watermarkFlush)
       Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
     else Seq.empty
 
@@ -138,7 +119,7 @@ object StreamParity {
     * r16, guide §6): every query here creates a THROWAWAY streaming
     * checkpoint — offset log, commit log, and one state-store delta
     * tree per micro-batch — and the per-batch floor decomposition
-    * (`tools/StreamFloorProbe`) showed those commits paying
+    * (`plans/r17/stream_floor_*.txt`) showed those commits paying
     * file-create + fsync + rename on ext4 `/tmp` (state-store
     * commitTimeMs summing 2-3 s per micro-batch across the 8-store
     * fleet, vs ~40 ms each for the wal/offset logs). That is pure
@@ -176,30 +157,17 @@ object StreamParity {
     p.delete(); ()
   }
 
-  /** Hand the throwaway checkpoints to the CHECKSUM-FREE local FS
-    * ([[graft.sources.RawLocalCkptFs]], scheme registered in
-    * GraftSession): the default `file://` is ChecksumFileSystem, so
-    * every offset-log, commit-log and state-delta write pays a `.crc`
-    * twin (create + write + rename doubled) — pure overhead on a
-    * tmpfs tree that lives for one query and is deleted on completion
-    * (see the class doc for why production durable checkpoints are a
-    * different story). Both schemes run on the fork-free raw file
-    * system ([[graft.sources.NoForkRawLocalFileSystem]]). Env override
-    * runs the checksummed default for A/Bs. */
-  private val ckptScheme =
-    if (envChoice("SPARK_GRAFT_CKPT_FS", Seq("raw", "default")) == "raw") "rawlocal://"
-    else ""
-
   /** Run `f` with a fresh per-query checkpoint dir under [[ckptRoot]],
     * deleting it afterwards (success or failure) so tmpfs never
     * accumulates sweep debris. The query name is already uniqued per
     * run ([[runSeq]]), so concurrent declared queries never collide.
-    * `f` receives the dir as a [[ckptScheme]]-qualified URI; cleanup
-    * always runs on the plain local path. */
+    * The plain local path resolves to `file://`, so these checkpoints
+    * take the same fork-free FileContext route with atomic rename as
+    * every other local checkpoint ([[graft.sources.LocalFsNoFork]]). */
   private def withEphemeralCkpt[T](qn: String)(f: String => T): T = {
     val dir = s"$ckptRoot/$qn"
     rmTree(new java.io.File(dir))
-    try f(s"$ckptScheme$dir") finally rmTree(new java.io.File(dir))
+    try f(dir) finally rmTree(new java.io.File(dir))
   }
 
   /** documents.parquet as a STREAM: the file source (the continuous-
@@ -1475,8 +1443,7 @@ object StreamParity {
       // false on two isolated A/B pairs (plans/r17/ab_rocksdb_track_
       // {true,false}{1,2}.json): all 5 provider queries faster in both
       // runs, ×0.92–0.97 best-of-two, controls flat; oracle 5/5 after.
-      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" ->
-        sys.env.getOrElse("SPARK_GRAFT_ROCKSDB_TRACK_ROWS", "false")
+      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false"
     ) ++ extraConfs
     withEphemeralCkpt(qn) { ckpt =>
       val q = withStreamConfs(s, confs: _*) {

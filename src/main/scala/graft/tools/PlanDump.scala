@@ -1,11 +1,10 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.execution.ExplainMode
 
-/** Optimization-round evidence dump: write each named query's
-  * `.explain("formatted")` output to `<outDir>/<query>_<tag>.txt`
-  * (the `plans/r16/` before/after artifacts the judge reads).
+/** Optimization-round evidence dump: run each named query and write
+  * its executed final adaptive plan to `<outDir>/<query>_<tag>.txt`
+  * (the `plans/r17/` before/after artifacts).
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <tag> <name>...
   */
@@ -19,32 +18,22 @@ object PlanDump {
     val spark = graft.GraftSession.builder(cpus, cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
-    // SPARK_GRAFT_PLAN_EXEC=1: execute the query and dump the FINAL
-    // adaptive plan (isFinalPlan=true) — the only place AQE's runtime
-    // join-strategy flips (e.g. a SortMergeJoin rewritten to
-    // BroadcastHashJoin under the session broadcast threshold) are
-    // visible; the pre-execution dump shows the initial plan for both
-    // sides of such an A/B.
-    //
-    // r16 ADVICE fix: the old exec mode ran `df.write.format("noop")`,
-    // which builds a SEPARATE QueryExecution — `df.queryExecution`
-    // itself never executed, so the "final" dump was still the initial
-    // plan (every r16 bcast artifact shows isFinalPlan=false). Drive
-    // the df's OWN QueryExecution to completion instead, and fail
-    // loudly if the dumped adaptive plan is not final.
-    val exec = sys.env.get("SPARK_GRAFT_PLAN_EXEC").contains("1")
+    // Execute the query and dump the FINAL adaptive plan
+    // (isFinalPlan=true), the only place AQE's runtime join-strategy
+    // flips (e.g. a SortMergeJoin rewritten to BroadcastHashJoin under
+    // the session broadcast threshold) are visible; a pre-execution
+    // dump shows the initial plan for both sides of such an A/B. The
+    // df's OWN QueryExecution runs (a `write.format("noop")` would build
+    // a separate one and leave this plan initial), and the dump fails
+    // loudly if the adaptive plan is not final.
     names.foreach { n =>
       try {
         val df = graft.SparkEntry.queries(n)(spark, d)
-        val plan = if (exec) {
-          df.queryExecution.toRdd.foreach(_ => ())
-          val p = df.queryExecution.executedPlan.toString
-          require(!p.contains("isFinalPlan=false"),
-            s"$n: executed-plan dump still carries isFinalPlan=false — " +
-              "the dumped QueryExecution did not run")
-          p
-        } else df.queryExecution.explainString(
-          ExplainMode.fromString("formatted"))
+        df.queryExecution.toRdd.foreach(_ => ())
+        val plan = df.queryExecution.executedPlan.toString
+        require(!plan.contains("isFinalPlan=false"),
+          s"$n: executed-plan dump still carries isFinalPlan=false — " +
+            "the dumped QueryExecution did not run")
         Files.write(Paths.get(outDir, s"${n}_$tag.txt"),
           plan.getBytes("UTF-8"))
         println(s"[plandump] wrote ${n}_$tag.txt (${plan.length} chars)")

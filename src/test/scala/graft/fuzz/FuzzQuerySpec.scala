@@ -237,7 +237,7 @@ class FuzzQuerySpec extends SparkSpec {
 
   test("adjudicated Spark 4.1.2 frontend bug: correlated scalar subquery over a bare UNION ALL crashes decorrelation") {
     // Surfaced by the revision-7 three-way differential (seeds 12@r7
-    // and 377@r7, hand-minimized with tools/RawSql): `spark.sql` dies
+    // and 377@r7, hand-minimized): `spark.sql` dies
     // with an INTERNAL java.util.NoSuchElementException ("key not
     // found: <attr>") — not an AnalysisException — while
     // decorrelating a correlated scalar subquery in (at least) TWO

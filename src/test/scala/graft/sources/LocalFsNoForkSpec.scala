@@ -17,7 +17,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileMan
   FileContextBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.SparkSpec
-import graft.streaming.{Event, EventStreams}
+import graft.streaming.{Event, EventStreams, StreamParity}
 
 /** [[LocalFsNoFork]] behaves like Hadoop's stock `LocalFs` on every
   * operation a streaming checkpoint performs, and a checkpointed stream
@@ -40,7 +40,7 @@ class LocalFsNoForkSpec extends SparkSpec {
   private def mode(p: JPath): Int = Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & oct("7777")
   private def crc(p: JPath): JPath = p.resolveSibling(s".${p.getFileName}.crc")
 
-  private def withDir(body: JPath => Unit): Unit = {
+  private def withDir[A](body: JPath => A): A = {
     val dir = Files.createTempDirectory("localfs-nofork")
     try body(dir)
     finally {
@@ -172,16 +172,13 @@ class LocalFsNoForkSpec extends SparkSpec {
     } finally { rec.close(); Files.deleteIfExists(file); () }
   }
 
-  test("three dedupEvents micro-batches on a plain-path checkpoint start no Hadoop Shell process") {
-    // Shell's class initializer runs a one-off `setsid` probe; load it
-    // before recording so only per-file process starts are counted.
-    assert(!Shell.WINDOWS)
-    // control: the recording sees a Shell process start
-    assert(shellStarts(Shell.execCommand("true")).size == 1)
-
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    withDir { dir =>
+  /** Streams whose checkpoints go through the `file://` FileContext. Each
+    * runs under [[shellStarts]], checks its own output and returns the
+    * starts seen. */
+  private val checkpointedStreams: Seq[(String, () => Seq[RecordedEvent])] = Seq(
+    "three dedupEvents micro-batches on a plain-path checkpoint" -> (() => withDir { dir =>
+      import spark.implicits._
+      implicit val ctx = spark.sqlContext
       val in = MemoryStream[Event]
       def ev(id: Long) = Event(id, Timestamp.valueOf(s"2024-01-01 10:0$id:00"), 1L, "view", 1.0, "{}")
       val starts = shellStarts {
@@ -197,6 +194,22 @@ class LocalFsNoForkSpec extends SparkSpec {
       val ids = spark.table("nofork_dedup").collect().map(_.getLong(0)).sorted
       assert(ids.sameElements(Array(1L, 2L, 3L, 4L)))
       assert(Files.exists(dir.resolve("ckpt/commits/2")), "expected three committed batches")
+      starts
+    }),
+    // the parity harness's throwaway checkpoints under StreamParity.ckptRoot
+    "st_exact_dedup's StreamParity harness checkpoints" -> (() => shellStarts {
+      assert(StreamParity.queries("st_exact_dedup")(spark, sfDir).count() > 0)
+    }))
+
+  checkpointedStreams.foreach { case (name, run) =>
+    test(s"$name start no Hadoop Shell process") {
+      // Shell's class initializer runs a one-off `setsid` probe; load it
+      // before recording so only per-file process starts are counted.
+      assert(!Shell.WINDOWS)
+      // control: the recording sees a Shell process start
+      assert(shellStarts(Shell.execCommand("true")).size == 1)
+
+      val starts = run()
       val first = starts.headOption.toSeq.flatMap(_.getStackTrace.getFrames.asScala.take(12))
         .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}")
       val n = starts.size

@@ -7,22 +7,6 @@ import graft.SparkSpec
   * hash-check, pinned locally first. */
 class StreamParitySpec extends SparkSpec {
 
-  test("A/B env knobs: unset gives the default, a misspelled value fails") {
-    val trailing = Seq("skip", "run")
-    val knob = "SPARK_GRAFT_TRAILING_BATCH"
-    assert(StreamParity.envChoice(knob, trailing, Map.empty) == "skip")
-    assert(StreamParity.envChoice(knob, trailing, Map(knob -> "run")) == "run")
-    val e = intercept[RuntimeException] {
-      StreamParity.envChoice(knob, trailing, Map(knob -> "skp"))
-    }
-    assert(e.getMessage.contains("skip, run"), e.getMessage)
-    val fs = "SPARK_GRAFT_CKPT_FS"
-    assert(StreamParity.envChoice(fs, Seq("raw", "default"), Map.empty) == "raw")
-    intercept[RuntimeException] {
-      StreamParity.envChoice(fs, Seq("raw", "default"), Map(fs -> "RAW"))
-    }
-  }
-
   test("st_exact_dedup fp set == batch distinct-md5 set") {
     import org.apache.spark.sql.functions._
     val streamed = StreamParity.queries("st_exact_dedup")(spark, sfDir)
